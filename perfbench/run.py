@@ -15,8 +15,12 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
+import time
+
+START = time.monotonic()
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.getcwd()
@@ -27,6 +31,11 @@ CORPUS = os.path.join(HERE, "data", "sf0.01")
 
 sys.path.insert(0, HERE)
 import oracle  # noqa: E402
+
+# A run must end within 180 s, or 900 s when it builds first. The JVM gets
+# what is left of that, less a margin for the oracle check and clean-up.
+RUN_LIMIT_S, BUILD_RUN_LIMIT_S, MARGIN_S = 180, 900, 15
+BUILD_LIMIT_S = 600
 
 JDK_OPENS = [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
@@ -40,11 +49,27 @@ def die(msg):
     sys.exit(2)
 
 
+def run_bounded(cmd, timeout, **kw):
+    """subprocess.run in a process group of its own. On timeout, or when
+    this script is interrupted, the whole group (sbt's JVM too) is killed
+    and reaped before the exception goes on."""
+    p = subprocess.Popen(cmd, start_new_session=True, **kw)
+    try:
+        p.wait(timeout=timeout)
+    except BaseException:
+        os.killpg(p.pid, signal.SIGKILL)
+        p.wait()
+        raise
+    return p
+
+
 def source_digest(dirs):
     h = hashlib.sha256()
     for d in dirs:
-        for base, subdirs, files in sorted(os.walk(d)):
-            subdirs.sort()
+        for base, subdirs, files in os.walk(d):
+            # sbt's own output under the build definition is not source
+            subdirs[:] = sorted(n for n in subdirs
+                                if n != "target" and not (n == "project" and base.endswith("project")))
             for f in sorted(files):
                 p = os.path.join(base, f)
                 h.update(os.path.relpath(p, ROOT).encode())
@@ -55,7 +80,8 @@ def source_digest(dirs):
 
 def build():
     """Compile program + harness with the benchmark's own sbt build; return
-    the runtime classpath. Rebuilds only when a source file changed."""
+    the runtime classpath and whether it compiled. Rebuilds only when a
+    source file changed."""
     program = os.path.join(ROOT, "src", "main", "scala")
     if not os.path.isdir(program):
         die("no program sources at src/main/scala: run from the root of a checkout")
@@ -64,7 +90,7 @@ def build():
         open(os.path.join(HERE, "build.sbt"), "rb").read()).hexdigest()
     stamp, cp_file = os.path.join(BUILD, "stamp"), os.path.join(BUILD, "classpath")
     if os.path.exists(stamp) and open(stamp).read() == digest and os.path.exists(cp_file):
-        return open(cp_file).read().strip()
+        return open(cp_file).read().strip(), False
     os.makedirs(BUILD, exist_ok=True)
     env = dict(os.environ, COURSIER_MODE="offline", LANG="C.UTF-8")
     opts = ["-Dsbt.offline=true", "-Xmx2g"]
@@ -74,11 +100,14 @@ def build():
     env["SBT_OPTS"] = " ".join(opts)
     log = os.path.join(BUILD, "build.log")
     with open(log, "w") as fh:
-        r = subprocess.run(
-            ["sbt", "--batch", "--no-server", "-Dsbt.log.noformat=true",
-             "compile", "export Runtime/fullClasspath"],
-            cwd=HERE, env=env, stdin=subprocess.DEVNULL, stdout=fh, stderr=subprocess.STDOUT,
-            timeout=840)
+        try:
+            r = run_bounded(
+                ["sbt", "--batch", "--no-server", "-Dsbt.log.noformat=true",
+                 "compile", "export Runtime/fullClasspath"],
+                BUILD_LIMIT_S, cwd=HERE, env=env, stdin=subprocess.DEVNULL, stdout=fh,
+                stderr=subprocess.STDOUT)
+        except subprocess.TimeoutExpired:
+            die(f"build did not finish in {BUILD_LIMIT_S} s (log in {log})")
     lines = open(log).read().splitlines()
     cps = [l for l in lines if "scala-2.13/classes" in l and not l.startswith("[")]
     if r.returncode != 0 or not cps:
@@ -86,7 +115,7 @@ def build():
         die(f"build failed (log in {log})")
     open(cp_file, "w").write(cps[-1].strip())
     open(stamp, "w").write(digest)
-    return cps[-1].strip()
+    return cps[-1].strip(), True
 
 
 def cpu_ticks():
@@ -98,7 +127,7 @@ def cpu_ticks():
         return 0, 0
 
 
-def run_jvm(cp, args, work):
+def run_jvm(cp, args, work, limit_s):
     out = os.path.join(work, "result.json")
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
@@ -113,9 +142,14 @@ def run_jvm(cp, args, work):
             "--data", data, "--out", out]
     env = dict(os.environ, LANG="C.UTF-8")
     steal0, total0 = cpu_ticks()
+    timeout = START + limit_s - MARGIN_S - time.monotonic()
     with open(os.path.join(work, "jvm.log"), "w") as log:
-        r = subprocess.run(cmd, cwd=ROOT, env=env, stdin=subprocess.DEVNULL, stdout=log,
-                           stderr=subprocess.STDOUT, timeout=170)
+        try:
+            r = run_bounded(cmd, max(timeout, 1), cwd=ROOT, env=env, stdin=subprocess.DEVNULL,
+                            stdout=log, stderr=subprocess.STDOUT)
+        except subprocess.TimeoutExpired:
+            die(f"{args.workload} run stopped after {timeout:.0f} s, "
+                f"log in {os.path.join(work, 'jvm.log')}")
     steal1, total1 = cpu_ticks()
     if total1 > total0:
         # time the hypervisor gave this machine's CPUs to others: explains slow runs
@@ -129,6 +163,8 @@ def run_jvm(cp, args, work):
 
 
 def main():
+    # a terminated run still stops its JVM: SystemExit reaches run_bounded
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
@@ -142,12 +178,14 @@ def main():
     spec = json.load(open(spec_path))
     wanted = spec["per_layer"] if args.trace else spec["end_to_end"]
 
-    cp = build()
+    cp, built = build()
+    t_jvm = time.monotonic()
     work = os.path.join(WORK, args.workload)
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     try:
-        res = run_jvm(cp, args, work)
+        res = run_jvm(cp, args, work, BUILD_RUN_LIMIT_S if built else RUN_LIMIT_S)
+        t_check = time.monotonic()
         problems = list(res.get("problems", []))
         if args.workload == "query-mix":
             problems += oracle.check(CORPUS, os.path.join(work, "results"),
@@ -158,8 +196,14 @@ def main():
             p = os.path.join(work, name)
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
+    t_end = time.monotonic()
+    print(f"perfbench: build {t_jvm - START:.1f} s, jvm {t_check - t_jvm:.1f} s, "
+          f"checks and clean-up {t_end - t_check:.1f} s", file=sys.stderr)
     for p in problems:
         print(f"perfbench: check failed: {p}", file=sys.stderr)
+    if args.trace:
+        # the traced run's own end-to-end figures: traced minus untraced is the tracing overhead
+        print(f"perfbench: end-to-end while traced: {json.dumps(res.get('e2e', {}))}", file=sys.stderr)
     if res.get("failures"):
         print(f"perfbench: failed operations by error class: {json.dumps(res['failures'])}",
               file=sys.stderr)

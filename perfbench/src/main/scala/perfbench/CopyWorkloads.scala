@@ -27,17 +27,13 @@ object CopyWorkloads {
   def config(args: String*): CopyConfig =
     Graft.parseArgs(args).fold(e => throw new IllegalArgumentException(e), identity)
 
-  /** Bucket count `Executor.execute` derives for a plan of `bytes` file bytes. */
-  def bucketsFor(h: Harness, cfg: CopyConfig, bytes: Long): Int = {
-    val derived = math.max(1L, bytes / cfg.bytesPerTask).toInt
-    if (cfg.maxTasks > 0) math.min(cfg.maxTasks, math.max(derived, 1))
-    else math.max(derived, h.spark.sparkContext.defaultParallelism)
-  }
-
   /** One copy through the public plan/execute pair, each call under its own
-    * job group so a traced run can tell plan work from execute work. */
-  def copy(h: Harness, kind: String, cfg: CopyConfig): Either[Throwable, (Executor.CopyStats, Double)] = {
-    val r = h.op(kind) {
+    * job group so a traced run can tell plan work from execute work. In a
+    * traced run, `execBuckets` receives the bucket count `Graft.execute`
+    * partitioned the copy into, read from its jobs, whether or not it failed. */
+  def copy(h: Harness, kind: String, cfg: CopyConfig, counted: Boolean,
+      execBuckets: Int => Unit): Either[Throwable, (Executor.CopyStats, Double)] = {
+    val r = h.op(kind, counted) {
       val spark = h.spark
       spark.sparkContext.setJobGroup(s"$kind/plan", kind, interruptOnCancel = false)
       val t0 = System.nanoTime()
@@ -50,7 +46,8 @@ object CopyWorkloads {
     if (h.o.trace) {
       val p = h.groupStats(s"$kind/plan")
       val x = h.groupStats(s"$kind/exec")
-      r.foreach { case ((stats, planS), _) =>
+      execBuckets(x.partitionByParts)
+      if (counted) r.foreach { case ((stats, planS), _) =>
         h.sample("plan.plan_s", planS)
         h.sample("plan.jobs", p.jobs.toDouble)
         h.sample("plan.tasks", p.tasks.toDouble)
@@ -90,9 +87,10 @@ object CopyWorkloads {
   }
 
   /** Traced runs only: time the planner's phases one by one on the
-    * workload's trees, size the default bucket packing, and time the copy
-    * kernel alone. */
-  def phaseProbes(h: Harness, layout: Layout, src: Path, dst: Path): Unit = if (h.o.trace) {
+    * workload's trees, repeat the default cold copy's bucket packing with
+    * the bucket count its execution used (`buckets`, -1 when unknown), and
+    * time the copy kernel alone. */
+  def phaseProbes(h: Harness, layout: Layout, src: Path, dst: Path, buckets: Int): Unit = if (h.o.trace) {
     val spark = h.spark
     val (s, d) = (src.toString, dst.toString)
     locally {
@@ -109,11 +107,11 @@ object CopyWorkloads {
       h.sample("plan.diff_s", timed(Planner.updateDiff(all, d, skipTs = false, skipCrc = false).count())._2)
       h.sample("plan.deletes_s", timed(Planner.deleteTargets(spark, all, d).count())._2)
       // the default packing of a cold copy of the whole tree
-      val cfg = config("-pt", s, d)
-      val n0 = bucketsFor(h, cfg, layout.bytes)
+      if (buckets <= 0) h.log("no partitionBy job in the default cold copy: bucket overflow not measured")
+      val n0 = math.max(buckets, 1)
       val (packed, packS) = timed(Planner.assignBuckets(all, n0).collect())
       h.sample("plan.pack_s", packS)
-      h.sample("plan.bucket_overflow", packed.count(_._2 >= n0).toDouble)
+      if (buckets > 0) h.sample("plan.bucket_overflow", packed.count(_._2 >= n0).toDouble)
       val perBucket = packed.groupBy(_._2).values.map(_.map(t => if (t._1.src.isDir) 0L else t._1.src.length).sum.toDouble).toSeq
       h.sample("plan.bucket_skew", if (perBucket.isEmpty) 0.0 else perBucket.max / math.max(Stats.median(perBucket), 1.0))
       all.unpersist()
@@ -137,9 +135,54 @@ object CopyWorkloads {
     }
   }
 
-  /** copy: one round is four operations, always in this order (a round
-    * runs cold in a fresh session, and the first operation pays the copy
-    * path's warm-up), all on the same seeded tree:
+  /** One checked copy: the counters and the destination tree must match. */
+  def checked(h: Harness, kind: String, cfg: CopyConfig, root: Path, expected: Map[String, Node],
+      copied: Long, bytes: Long, dirs: Long, counted: Boolean = true,
+      execBuckets: Int => Unit = _ => ()): Unit =
+    copy(h, kind, cfg, counted, execBuckets).foreach { case (stats, _) =>
+      expectStats(h, kind, stats, copied, bytes, dirs)
+      expectTree(h, kind, expected, root)
+    }
+
+  /** Files of the warm-up tree: the layout's first small files at most one
+    * directory deep, so its walks take few levels. */
+  val WarmUpFiles = 24
+
+  /** The untimed warm-up on a small tree: a replica laid with plain file
+    * copies gets two stale files planted and three source files rewritten,
+    * then one `-update -delete -pt -m 1` resync brings it back. That loads
+    * and compiles the copy path's code (enumerate, plan, exec, delete-sync),
+    * so the timed round measures it warm. The resync is checked but not
+    * counted as an operation; with one bucket F1 cannot strike. */
+  def warmUp(h: Harness, layout: Layout): Unit = {
+    val files = layout.files.filter(f => f.size <= (64L << 10) && f.rel.count(_ == '/') <= 1).take(WarmUpFiles)
+    val small = Layout(files.map(f => Trees.parentOf(f.rel)).filter(_.nonEmpty).distinct, files)
+    val src = h.o.work.resolve("warm-src")
+    val dst = h.o.work.resolve("warm-dst")
+    val snap = Trees.write(src, small, h.o.seed)
+    Trees.replicate(src, dst, snap)
+    val content = new Trees.Content(h.o.seed)
+    // stale files only, no stale directories: the walks stay two levels deep
+    (small.dirs.take(1) :+ "").foreach(d => content.write(dst.resolve(d).resolve("stale.tmp"), "stale", 100, 1000L))
+    val changed = small.files.take(3).map(f => f.copy(size = f.size + 100))
+    val after = changed.foldLeft(snap) { (m, f) =>
+      val p = src.resolve(f.rel)
+      val crc = content.write(p, f.rel, f.size, 1000L)
+      val mt = Trees.mtimeOf(h.o.seed, f.rel) + 1000L
+      Files.setLastModifiedTime(p, FileTime.fromMillis(mt))
+      m.updated(f.rel, Node(isDir = false, f.size, crc, mt))
+    }
+    val w0 = h.callSeconds
+    checked(h, "warmup-resync", config("-update", "-delete", "-pt", "-m", "1", src.toString, dst.toString),
+      dst, after, changed.length, changed.map(_.size).sum, small.dirs.length.toLong, counted = false)
+    h.sample("copy.warmup_s", h.callSeconds - w0)
+    Trees.deleteTree(src)
+    Trees.deleteTree(dst)
+  }
+
+  /** copy: the warm-up, then timed rounds (one takes far longer than
+    * `run_seconds`, so a run makes one) of four operations, always in
+    * this order, all on the same seeded tree:
     *   - cold `-pt` copies into empty destinations, one with the default
     *     packing and one single-task (`-m 1`);
     *   - `-update -delete -pt` resyncs against a replica the benchmark laid
@@ -152,11 +195,13 @@ object CopyWorkloads {
     val (snap, genS) = timed(Trees.write(src, layout, h.o.seed))
     Trees.replicate(src, dst, snap)
     h.log(f"generated ${layout.files.length} files, ${layout.dirs.length} dirs, ${layout.bytes / 1e6}%.1f MB in $genS%.2f s")
+    warmUp(h, layout)
     val delta = Trees.delta(layout, LayoutSeed)
     val deltaBytes = delta.map(_.size).sum
     val content = new Trees.Content(h.o.seed)
     val orig = layout.files.map(f => f.rel -> f.size).toMap
     val nDirs = layout.dirs.length.toLong
+    var defaultBuckets = -1
     def resync: CopyConfig = config("-update", "-delete", "-pt", src.toString, dst.toString)
     /** Put `root` back to the base tree at the delta's paths. */
     def revert(root: Path): Unit = delta.foreach { f =>
@@ -168,25 +213,21 @@ object CopyWorkloads {
         case None => Files.deleteIfExists(p)
       }
     }
-    /** One checked copy: counters and the destination tree must match. */
-    def checked(kind: String, cfg: CopyConfig, root: Path, expected: Map[String, Node],
-        copied: Long, bytes: Long): Unit =
-      copy(h, kind, cfg).foreach { case (stats, _) =>
-        expectStats(h, kind, stats, copied, bytes, nDirs)
-        expectTree(h, kind, expected, root)
-      }
-    h.rounds { k =>
+    h.rounds(minRounds = 1) { k =>
       Seq("cold-default", "cold-single", "prune", "delta").foreach {
-        case cold if cold.startsWith("cold-") =>
-          val d = h.o.work.resolve(s"$cold-$k")
-          val cfg =
-            if (cold == "cold-default") config("-pt", src.toString, d.toString)
-            else config("-pt", "-m", "1", src.toString, d.toString)
-          checked(cold, cfg, d, snap, layout.files.length, layout.bytes)
+        case "cold-default" =>
+          val d = h.o.work.resolve(s"cold-default-$k")
+          checked(h, "cold-default", config("-pt", src.toString, d.toString), d, snap,
+            layout.files.length, layout.bytes, nDirs, execBuckets = n => defaultBuckets = n)
+          Trees.deleteTree(d)
+        case "cold-single" =>
+          val d = h.o.work.resolve(s"cold-single-$k")
+          checked(h, "cold-single", config("-pt", "-m", "1", src.toString, d.toString), d, snap,
+            layout.files.length, layout.bytes, nDirs)
           Trees.deleteTree(d)
         case "prune" =>
           Trees.plantStale(dst, layout, h.o.seed, k)
-          checked("prune", resync, dst, snap, 0, 0)
+          checked(h, "prune", resync, dst, snap, 0, 0, nDirs)
         case "delta" =>
           var after = snap
           delta.foreach { f =>
@@ -196,7 +237,7 @@ object CopyWorkloads {
             Files.setLastModifiedTime(p, FileTime.fromMillis(mt))
             after = after.updated(f.rel, Node(isDir = false, f.size, crc, mt))
           }
-          checked("delta", resync, dst, after, delta.length, deltaBytes)
+          checked(h, "delta", resync, dst, after, delta.length, deltaBytes, nDirs)
           revert(src)
           revert(dst)
       }
@@ -205,6 +246,6 @@ object CopyWorkloads {
     h.sample("copy.cold_single_s", h.kindMedian("cold-single"))
     h.sample("copy.cold_default_s", h.kindMedian("cold-default"))
     h.sample("copy.cold_mb_per_s", layout.bytes / 1e6 / h.kindMedian("cold-single"))
-    phaseProbes(h, layout, src, dst)
+    phaseProbes(h, layout, src, dst, defaultBuckets)
   }
 }

@@ -72,7 +72,6 @@ final class Harness(val o: Opts) {
   val metrics = mutable.LinkedHashMap.empty[String, Double]
   /** Per-layer samples, reported as medians. */
   val layer = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
-  private val setupSamples = mutable.ArrayBuffer.empty[Double]
 
   def log(msg: String): Unit = System.err.println(s"[perfbench] $msg")
 
@@ -115,25 +114,15 @@ final class Harness(val o: Opts) {
     ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
   }
 
-  /** First set-up, timed from JVM start until the session has run a job. */
+  /** The run's one set-up, timed from JVM start until the session has
+    * installed the program's functions and run a job: what every invocation
+    * of the program pays before its first operation. */
   def coldSetUp(extra: Seq[(String, String)] = Nil): Unit = {
     val (session, warm) = setUp(extra)
-    val sinceStart = System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime
-    setupSamples += sinceStart / 1e3
+    metrics("setup_s") = (System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
     sample("setup.session_s", session)
     sample("setup.warmup_s", warm)
   }
-
-  /** Stop the session and set it up again, twice more, timing each. */
-  def warmSetUps(extra: Seq[(String, String)] = Nil, n: Int = 2): Unit =
-    for (_ <- 0 until n) {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val t0 = System.nanoTime()
-      setUp(extra)
-      setupSamples += (System.nanoTime() - t0) / 1e9
-    }
 
   def gcSeconds: Double =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).filter(_ >= 0).sum / 1e3
@@ -159,9 +148,11 @@ final class Harness(val o: Opts) {
   }
 
   /** Run one operation under its own job group. A throw counts the
-    * operation as failed, under its innermost error class. */
-  def op[T](group: String)(body: => T): Either[Throwable, (T, Double)] = {
-    attempted += 1
+    * operation as failed, under its innermost error class. A warm-up
+    * operation (`counted = false`) is not counted; its throw is a problem
+    * that makes the run incorrect. */
+  def op[T](group: String, counted: Boolean = true)(body: => T): Either[Throwable, (T, Double)] = {
+    if (counted) attempted += 1
     val sc = spark.sparkContext
     sc.setJobGroup(group, group, interruptOnCancel = false)
     val c0 = cpuSeconds
@@ -173,10 +164,12 @@ final class Harness(val o: Opts) {
       Right((r, sec))
     } catch {
       case e: Throwable if scala.util.control.NonFatal(e) =>
-        failed += 1
         val cls = errorClass(e)
         log(f"$group%-24s FAILED ${(System.nanoTime() - t0) / 1e9}%.3f s: $cls")
-        failuresByClass(cls) = failuresByClass.getOrElse(cls, 0) + 1
+        if (counted) {
+          failed += 1
+          failuresByClass(cls) = failuresByClass.getOrElse(cls, 0) + 1
+        } else problems += s"warm-up $group failed: $cls"
         Left(e)
     } finally {
       val sec = (System.nanoTime() - t0) / 1e9
@@ -205,26 +198,33 @@ final class Harness(val o: Opts) {
       case _ => Double.NaN
     }
 
-  /** Whole rounds, the first in the fresh session, until `seconds` have
-    * passed since the first began. A round's wall and CPU seconds count
-    * only the program calls in it, failed ones included, not the
-    * benchmark's own set-up and checks between them. */
-  def rounds(round: Int => Unit): Unit = {
+  /** Whole timed rounds: at least `minRounds`, and more until `seconds`
+    * have passed since the first began. The workload runs its untimed
+    * warm-up before. A fixed least count keeps the number of rounds, and so
+    * how warm the median round is, the same on a slower or busier machine.
+    * A round's wall and CPU seconds count only the program calls in it,
+    * failed ones included, not the benchmark's own set-up and checks between
+    * them; the metrics are medians over the rounds. */
+  def rounds(minRounds: Int)(round: Int => Unit): Unit = {
     val gc0 = gcSeconds
     val t0 = System.nanoTime()
     var k = 0
-    while (k == 0 || (System.nanoTime() - t0) / 1e9 < o.seconds) {
+    while (k < minRounds || (System.nanoTime() - t0) / 1e9 < o.seconds) {
       val (w0, c0) = (opSeconds, opCpu)
       round(k)
       roundWall += opSeconds - w0
       roundCpu += opCpu - c0
       k += 1
     }
+    log(f"$k timed round(s): ${roundWall.map(s => f"$s%.2f").mkString(" ")} s")
     sample("runtime.gc_s", (gcSeconds - gc0) / k)
     metrics("round_s") = Stats.median(roundWall.toSeq)
     metrics("round_cpu_s") = Stats.median(roundCpu.toSeq)
     metrics("live_heap_mb") = liveHeapMiB
   }
+
+  /** Wall seconds of the program calls made so far. */
+  def callSeconds: Double = opSeconds
 
   private var opSeconds = 0.0
   private var opCpu = 0.0
@@ -232,7 +232,6 @@ final class Harness(val o: Opts) {
   private val roundCpu = mutable.ArrayBuffer.empty[Double]
 
   def writeResult(layerNames: Seq[String]): Unit = {
-    metrics("setup_s") = Stats.median(setupSamples.toSeq)
     val m =
       // a layer the workload does not exercise reads 0
       if (o.trace) layerNames.map(n => n -> Stats.median(layer.getOrElse(n, mutable.ArrayBuffer(0.0)).toSeq))
@@ -243,7 +242,6 @@ final class Harness(val o: Opts) {
       "problems" -> problems.take(20).map(Js.str).mkString("[", ",", "]"),
       "times" -> Js.obj(times.map { case (k, v) => k -> v.map(Js.num).mkString("[", ",", "]") }),
       "e2e" -> Js.obj(metrics.map { case (k, v) => k -> Js.num(v) }),
-      "setup_samples" -> setupSamples.map(Js.num).mkString("[", ",", "]"),
       "cpus" -> cpus.toString,
     )
     val json = Js.obj(Seq(

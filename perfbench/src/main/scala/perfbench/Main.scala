@@ -9,9 +9,9 @@ object Main {
     "plan.pack_s", "plan.bucket_skew", "plan.bucket_overflow",
     "exec.setup_ms", "exec.run_ms", "exec.cleanup_ms", "exec.jobs", "exec.task_skew",
     "exec.copy_one_mb_per_s",
-    "copy.cold_single_s", "copy.cold_default_s", "copy.cold_mb_per_s",
+    "copy.warmup_s", "copy.cold_single_s", "copy.cold_default_s", "copy.cold_mb_per_s",
     "resync.prune_s", "resync.delta_s",
-    "queries.floor_s",
+    "queries.floor_s", "queries.first_pass_s",
     "queries.relational.pass_s", "queries.relational.jobs", "queries.relational.tasks",
     "queries.relational.executor_s", "queries.relational.shuffle_mb",
     "queries.dedup.pass_s", "queries.dedup.jobs", "queries.dedup.tasks",
@@ -31,7 +31,6 @@ object Main {
       case "query-mix" => QueryMix.run(h)
       case w => throw new IllegalArgumentException(s"unknown workload '$w'")
     }
-    h.warmSetUps(extra)
     h.writeResult(LayerMetrics)
     h.spark.stop()
   }

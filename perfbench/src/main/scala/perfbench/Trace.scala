@@ -12,10 +12,15 @@ final class GroupStats {
   var tasks = 0L
   var executorMs = 0L
   var shuffleBytes = 0L
+  /** Partition count of an RDD the group's jobs built with `partitionBy`:
+    * the bucket count of `Executor.execute`'s identity-partitioned copy;
+    * -1 when no job did. */
+  var partitionByParts = -1
   val stageTaskMs = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[Long]]
 
   def add(o: GroupStats): Unit = {
     jobs += o.jobs; tasks += o.tasks; executorMs += o.executorMs; shuffleBytes += o.shuffleBytes
+    partitionByParts = math.max(partitionByParts, o.partitionByParts)
     o.stageTaskMs.foreach { case (k, v) => stageTaskMs.getOrElseUpdate(k, mutable.ArrayBuffer.empty) ++= v }
   }
 
@@ -41,7 +46,10 @@ final class GroupListener extends SparkListener {
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
     e.stageIds.foreach(stageGroup(_) = g)
-    of(g).jobs += 1
+    val s = of(g)
+    s.jobs += 1
+    e.stageInfos.iterator.flatMap(_.rddInfos).filter(_.callSite.startsWith("partitionBy at "))
+      .foreach(r => s.partitionByParts = math.max(s.partitionByParts, r.numPartitions))
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {

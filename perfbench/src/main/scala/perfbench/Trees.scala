@@ -262,9 +262,13 @@ object Trees {
 
   /** Plant stale entries into a destination: one file in about every
     * hundredth directory and three stale directories with nested files.
-    * Returns the expected number of planted files. */
+    * The stale directories hang under top-level directories, so they reach
+    * no deeper than the source tree whatever the seed: a deeper destination
+    * would cost every walk of it one more level of jobs. Returns the
+    * expected number of planted files. */
   def plantStale(dst: Path, layout: Layout, seed: Long, round: Int): Int = {
     val r = new SplittableRandom(seed * 1000003L + round)
+    val tops = layout.dirs.filter(!_.contains('/'))
     val content = new Content(seed + round)
     var n = 0
     layout.dirs.foreach { d =>
@@ -275,7 +279,7 @@ object Trees {
       }
     }
     for (k <- 0 until 3) {
-      val base = s"${layout.dirs(r.nextInt(layout.dirs.length))}/stale-dir-$round-$k"
+      val base = s"${tops(r.nextInt(tops.length))}/stale-dir-$round-$k"
       for (j <- 0 until 4) {
         val rel = s"$base/sub$j/old-$j.dat"
         content.write(dst.resolve(rel), rel, r.nextLong(4L << 10), 2L)

@@ -6,9 +6,9 @@ the metric's bound from BENCHMARK.json.
     python3 perfbench/steady.py --workload copy [--runs 10] [--trace 0]
 
 Run from the root of a checkout. The spread is (Q3 - Q1) / median with the
-quartiles of statistics.quantiles(values, n=4); setup_s is reported but its
-spread is not held to the bound. Exits 1 when a spread exceeds its bound or
-the share of failed operations differs between runs.
+quartiles of statistics.quantiles(values, n=4), held to the bound of every
+metric that has one. Exits 1 when a spread exceeds its bound or the share of
+failed operations differs between runs.
 """
 import argparse
 import json
@@ -56,7 +56,7 @@ def main():
         spread = (q3 - q1) / med if med else 0.0
         b = bounds.get(k)
         verdict = ""
-        if b is not None and k != "setup_s":
+        if b is not None:
             fits = spread <= b
             ok &= fits
             verdict = "ok" if spread <= b / 3 else "fits" if fits else "TOO WIDE"
